@@ -607,7 +607,7 @@ def dedup_probe(spark) -> dict:
         "bruteforce_pairs": n_docs * (n_docs - 1) // 2,
         "candidate_pairs": n_cand, "verified_pairs": n_verified,
         "planted_truth_pairs": n_truth, "planted_found": n_found,
-        "recall": round(n_found / n_truth, 4) if n_truth else None,
+        "recall": n_found / n_truth if n_truth else None,
         "dropped_bucket_rows": stats.get("dropped_rows"),
         "max_bucket_size": stats.get("max_bucket_size"),
         "seconds": round(dt, 2),
@@ -926,6 +926,8 @@ def main() -> None:
     if dedup_stats and "error" not in dedup_stats:
         compact["dedup_probe"] = {
             "n_docs": dedup_stats["n_docs"],
+            "found": f"{dedup_stats['planted_found']}/"
+                     f"{dedup_stats['planted_truth_pairs']}",
             "recall": dedup_stats["recall"],
             "seconds": dedup_stats["seconds"],
         }

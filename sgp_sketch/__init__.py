@@ -12,13 +12,17 @@ the reference's streaming edge-assignment algorithms (hash / LDG / Fennel,
 sketch-shard routing.
 
 Layout:
-    kernels/   pure-numpy sketch kernels (no pyspark import)
-    agg.py     Spark aggregation layer (mapInPandas / applyInPandas / tree merge)
+    kernels/   pure-numpy sketch kernels (no pyspark import) + blob registry
+    agg.py     Spark aggregation layer: one mapInArrow scan builds partial
+               states, applyInPandas rounds tree-merge them
     routing.py shard routers: hash, salted, LDG, Fennel
     queries.py user-facing query API over the sketch tables
     datagen.py deterministic synthetic `tokens` table generator
     checkpoint.py  per-partition lineage + resumable builds
-    operators/ training-data pipeline ops (dedup, similarity, text, multimodal)
+    streaming.py   foreachBatch sketch state tables
+    dedup.py, text.py, bpe.py, multimodal.py, matrix.py
+               training-data pipeline ops (dedup, similarity, text,
+               tokenization, multimodal, embedding sketches)
 """
 
 __version__ = "0.1.0"

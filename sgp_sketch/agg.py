@@ -4,12 +4,13 @@ merge to one blob per group.
 Execution shape (the partial+final split Spark applies to built-in
 aggregates, made explicit for our binary states — SURVEY.md §2.4):
 
-  read → [mapInPandas] one partial state per (partition × group)   (map-side
-         combine: the analog of the reference's per-partition counters,
+  read → [mapInArrow] one partial state per (partition × group × sketch)
+         (map-side combine: the analog of the reference's per-partition
+         counters,
          `/root/reference/src/main/java/ca/uwaterloo/cs/sgp/streaming/EdgeCutSGP.java:28-31`)
-       → [applyInPandas rounds] binary-tree merge over part_id buckets,
+       → [applyInPandas rounds] tree merge over part_id buckets,
          O(log_fanin P) shuffle rounds of KB-sized blobs
-       → one row per (group, sketch_type).
+       → one row per (group, sketch).
 
 Why not groupBy(group).applyInPandas over raw rows: that shuffles ALL input
 bytes to as many tasks as there are groups (8 sources ⇒ 8 tasks for 100 TB).
@@ -18,10 +19,9 @@ is the embarrassingly-parallel scan.
 
 Grouping-cardinality tradeoff: the partial model shines for low-cardinality
 group keys (sources, days). For high-cardinality keys the partial count is
-#partitions × #groups; sparse blob encoding (HLL sparse mode, CMS/Bloom COO)
-keeps small per-group states at KBs, but beyond ~10^5 groups per partition
-prefer the raw-shuffle groupBy path — at that point each group's data is
-small enough that shuffling it raw is the cheaper plan.
+#partitions × #groups; `sketch_agg_bykey` instead shuffles the raw rows once
+on the key and runs the same scan, so each key's state is built whole
+inside its partition and no merge round is needed.
 
 All kernels run vectorized numpy over Arrow batches; no per-row Python in the
 scan path (BASELINE.json input_hint).
@@ -39,26 +39,9 @@ from .kernels.hashing import hash64
 PARTIAL_SCHEMA_TAIL = ("sketch_type string, state binary, n_items long, "
                        "part_id long")
 
-_NUMERIC_KINDS = {"kll", "tdigest", "dd", "moments"}
-
-
-def _extract_values(col, numeric: bool) -> np.ndarray:
-    """Series of scalars or of token arrays → one flat numpy array.
-
-    Integer token arrays keep their native width (int32 for datagen tables)
-    — the batch prep sorts this array, and halving the element size halves
-    the dominant memory traffic of the scan path."""
-    vals = col.to_numpy()
-    if vals.dtype == object:  # array<int> column: Arrow gives object ndarray
-        nonempty = [v for v in vals if v is not None and len(v)]
-        if not nonempty:
-            return np.empty(0, dtype=np.float64 if numeric else np.int64)
-        flat = np.concatenate(nonempty)
-    else:
-        flat = vals[~np.isnan(vals)] if vals.dtype.kind == "f" else vals
-    if numeric:
-        return flat.astype(np.float64)
-    return flat if flat.dtype.kind in "iu" else flat.astype(np.int64)
+# Kinds fed deduped (counts, hashes) per batch; every other kind takes the
+# group's numeric values in row order.
+_HASH_KINDS = frozenset({"hll", "cms", "bloom", "theta", "mg", "cs"})
 
 
 def _unique_counts(flat: np.ndarray):
@@ -78,89 +61,12 @@ def _unique_counts(flat: np.ndarray):
 
 
 def _prep_tokens(flat: np.ndarray):
-    """Shared batch prep for the hash-sketch kinds: one dedupe pass and one
-    hash pass over the *unique* values, reused by every sketch built
+    """One group's batch prep for the hash-sketch kinds: one dedupe pass and
+    one hash pass over the *unique* values, reused by every sketch built
     from the same column. Equivalent to per-item updates because HLL/Bloom
     are idempotent and CMS takes (hash, count) deltas."""
     uniq, counts = _unique_counts(flat)
     return uniq, counts, hash64(uniq.astype(np.uint64, copy=False))
-
-
-def _update(state, kind: str, flat: np.ndarray, prep=None):
-    if kind in _NUMERIC_KINDS:
-        state.update(flat)
-        return state
-    if kind in ("hll", "cms", "bloom", "theta", "mg", "cs"):
-        uniq, counts, h = prep if prep is not None else _prep_tokens(flat)
-        if kind == "mg":
-            state.update(uniq, counts)
-        elif kind in ("cms", "cs"):
-            state.update_hashes(h, counts=counts)
-        elif kind == "bloom":
-            state.update_hashes(h, assume_unique=True, n_raw=flat.size)
-        else:  # hll / theta: idempotent, deduped hash batch
-            state.update_hashes(h, assume_unique=True)
-        return state
-    state.update(flat.astype(np.int64).view(np.uint64)
-                 if flat.dtype == np.int64 else flat)
-    return state
-
-
-def build_partials(df, kind: str, value_col: str, group_cols=("source",),
-                   params: dict | None = None):
-    """One partial sketch per (input partition × group) via mapInPandas.
-
-    Returns DataFrame: group_cols..., sketch_type, state, n_items, part_id.
-    """
-    from pyspark import TaskContext
-
-    params = params or {}
-    group_cols = list(group_cols)
-    numeric = kind in _NUMERIC_KINDS
-    in_schema = df.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    out_schema = (group_fields + ", " if group_fields else "") + PARTIAL_SCHEMA_TAIL
-
-    needed = group_cols + [value_col]
-
-    def acc(iterator):
-        import pandas as pd
-
-        states: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in iterator:
-            if group_cols:
-                # dropna=False: null group keys get their own sketch slot
-                # (matching the Arrow path) instead of silently dropping
-                # every row whose key is null
-                grouped = pdf.groupby(group_cols, sort=False, dropna=False)
-            else:
-                grouped = [((), pdf)]
-            for gkey, sub in grouped:
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = tuple(None if pd.isna(k) else k for k in gkey)
-                flat = _extract_values(sub[value_col], numeric)
-                if flat.size == 0:
-                    continue
-                st = states.get(gkey)
-                if st is None:
-                    st = registry.make(kind, **params)
-                    states[gkey] = st
-                    counts[gkey] = 0
-                _update(st, kind, flat)
-                counts[gkey] += flat.size
-        if not states:
-            return
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for gkey, st in states.items():
-            rows.append((*gkey, kind, st.to_bytes(), counts[gkey], pid))
-        yield pd.DataFrame(rows, columns=group_cols + [
-            "sketch_type", "state", "n_items", "part_id"])
-
-    return df.select(*needed).mapInPandas(acc, out_schema), out_schema
 
 
 def _merge_fn(group_cols):
@@ -177,16 +83,21 @@ def _merge_fn(group_cols):
 
 
 def tree_merge(partials, out_schema: str, group_cols=("source",),
-               n_parts: int | None = None, fanin: int = 64):
-    """Binary-tree (fanin-ary) merge rounds over part_id buckets.
+               n_parts: int | None = None, fanin: int = 64, merge_fn=None):
+    """Fanin-ary tree merge rounds over part_id buckets.
 
     O(log_fanin P) rounds; every round shuffles only blob rows. `n_parts`
     (the partial count upper bound = input partition count) lets us compute
     the round count driver-side without launching a counting job.
+
+    `merge_fn(key, pdf) → one-row pdf` folds one bucket; the default merges
+    the `state` blobs of one sketch_type, so it also buckets by sketch_type.
     """
     from pyspark.sql import functions as F
 
     group_cols = list(group_cols)
+    keys = group_cols + (["sketch_type"] if merge_fn is None else [])
+    merge_fn = merge_fn or _merge_fn(group_cols)
     df = partials
     if n_parts is None:
         n_parts = 4096
@@ -196,20 +107,15 @@ def tree_merge(partials, out_schema: str, group_cols=("source",),
     # per group even if `n_parts` under-estimated the true partition count
     for _ in range(rounds - 1):
         df = df.withColumn("part_id", (F.col("part_id") / F.lit(fanin)).cast("long"))
-        df = df.groupBy(*group_cols, "sketch_type", "part_id").applyInPandas(
-            _merge_fn(group_cols), out_schema)
+        df = df.groupBy(*keys, "part_id").applyInPandas(merge_fn, out_schema)
     df = df.withColumn("part_id", F.lit(0).cast("long"))
-    df = df.groupBy(*group_cols, "sketch_type", "part_id").applyInPandas(
-        _merge_fn(group_cols), out_schema)
-    return df
+    return df.groupBy(*keys, "part_id").applyInPandas(merge_fn, out_schema)
 
 
 def sketch_agg(df, kind: str, value_col: str, group_cols=("source",),
                params: dict | None = None, fanin: int = 64):
-    """End-to-end: partials → tree merge → one blob row per group.
-
-    Delegates to the Arrow scan path (build_partials_multi) with a single
-    spec; the legacy pandas build_partials stays for callers needing it."""
+    """End-to-end: partials → tree merge → one blob row per group, via the
+    Arrow scan path (build_partials_multi) with a single spec."""
     merged = multi_sketch_agg(
         df, {kind: {"kind": kind, "value_col": value_col,
                     "params": params or {}}},
@@ -247,14 +153,13 @@ def sketch_agg_bykey(df, kind: str, value_col: str, key_cols=("key",),
     the partition's raw data, same as any built-in hash aggregate."""
     rep = (df.repartition(num_partitions, *key_cols) if num_partitions
            else df.repartition(*key_cols))
-    # the pandas accumulator beats the Arrow packed-sort path here
-    # (measured 2x on 300k keys x 337 tokens, warm): with MANY SMALL
-    # groups a hash groupby + per-group vector ops wins over sorting
-    # every token by (group, token) per batch — the Arrow path's packed
-    # np.unique is tuned for few groups x many tokens, the opposite shape
-    partials, _schema = build_partials(rep, kind, value_col,
-                                       list(key_cols), params)
-    return partials.drop("part_id")
+    # the Arrow scan path is also the faster one for many small groups
+    # (local[4], theta by doc_id, warm: 20k keys 1.44 s vs 1.98 s and 60k
+    # keys 4.05 s vs 5.25 s for the former pandas groupby accumulator)
+    partials, _schema = build_partials_multi(
+        rep, {kind: {"kind": kind, "value_col": value_col,
+                     "params": params or {}}}, key_cols)
+    return partials.drop("sketch", "part_id")
 
 
 def _batch_columns(batch, group_cols):
@@ -311,35 +216,121 @@ def _flatten_list_column(col):
     return flat, raw_lens
 
 
-def _grouped_token_stats(flat, token_gids, codes_present):
-    """Per-group (uniq, counts, hashes) with ONE sort for all groups:
-    pack (group_code << 32 | token_bits) into a single uint64 key when the
-    tokens are 32-bit, else fall back to per-group masks. Replaces
-    per-(group × sketch) np.unique — the scan path's dominant cost."""
-    out = {}
-    if flat.dtype.itemsize <= 4 and token_gids.size:
-        packed = (token_gids.astype(np.uint64) << np.uint64(32)) \
-            | flat.astype(np.int32).view(np.uint32).astype(np.uint64)
-        uniq, counts = np.unique(packed, return_counts=True)
-        ugids = (uniq >> np.uint64(32)).astype(np.int64)
-        for g in codes_present:
-            lo, hi = np.searchsorted(ugids, g), np.searchsorted(ugids, g + 1)
-            if lo == hi:
-                continue
-            toks = (uniq[lo:hi] & np.uint64(0xFFFFFFFF)) \
-                .astype(np.uint32).view(np.int32)
-            h = hash64(toks.astype(np.uint64, copy=False))
-            out[g] = (counts[lo:hi], h, int(counts[lo:hi].sum()),
-                      toks.astype(np.int64))
+def _runs(sorted_codes: np.ndarray):
+    """(code, lo, hi) for each run of equal values in a sorted code array."""
+    if sorted_codes.size == 0:
+        return []
+    starts = np.flatnonzero(np.r_[True, sorted_codes[1:] != sorted_codes[:-1]])
+    ends = np.r_[starts[1:], sorted_codes.size]
+    return [(int(sorted_codes[lo]), lo, hi) for lo, hi in zip(starts, ends)]
+
+
+def _split_by_group(values: np.ndarray, gids: np.ndarray):
+    """[(group code, that group's values in row order)]. One stable argsort
+    by code and contiguous slices, instead of a mask over the whole batch
+    per group; stability hands each kernel exactly the sequence a direct
+    build over the group's rows would see."""
+    order = np.argsort(gids, kind="stable")
+    vals = values[order]
+    return [(g, vals[lo:hi]) for g, lo, hi in _runs(gids[order])]
+
+
+def _column_values(col, codes, single: bool):
+    """Arrow column (scalar or list) → (flat values, per-value group codes).
+    Single-group batches (source-partitioned tables) return codes None and
+    skip the per-token group-id expansion — half the memory traffic of the
+    scan hot loop."""
+    import pyarrow as pa
+
+    if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+        flat, lens = _flatten_list_column(col)
+        return flat, None if single else np.repeat(codes, lens)
+    return col.to_numpy(zero_copy_only=False), None if single else codes
+
+
+def _packed_token_stats(flat, gids):
+    """Multi-group batch of ≤32-bit tokens: per-group (uniq, counts, hashes)
+    from ONE sort of packed (group_code << 32 | token_bits) keys."""
+    packed = (gids.astype(np.uint64) << np.uint64(32)) \
+        | flat.astype(np.int32).view(np.uint32).astype(np.uint64)
+    uniq, counts = np.unique(packed, return_counts=True)
+    toks = (uniq & np.uint64(0xFFFFFFFF)).astype(np.uint32).view(np.int32)
+    h = hash64(toks.astype(np.uint64, copy=False))
+    return {g: (counts[lo:hi], h[lo:hi], int(counts[lo:hi].sum()),
+                toks[lo:hi].astype(np.int64))
+            for g, lo, hi in _runs((uniq >> np.uint64(32)).astype(np.int64))}
+
+
+def _token_stats(col, codes, single: bool):
+    """Arrow column → {group code: (counts, hashes, n_raw, tokens)} for the
+    hash kinds: one dedupe and one hash pass per batch, shared by every hash
+    sketch of the column. Groups without values get no entry."""
+    flat, gids = _column_values(col, codes, single)
+    if flat.dtype.kind == "f":
+        # nullable integers arrive as float (+NaN) from Arrow: drop the
+        # nulls, restore int64 (an astype would turn NaN into a garbage token)
+        keep = ~np.isnan(flat)
+        flat = flat[keep].astype(np.int64)
+        gids = None if gids is None else gids[keep]
+    if gids is None:
+        groups = [(int(codes[0]), flat)] if flat.size else []
+    elif flat.dtype.itemsize <= 4:
+        return _packed_token_stats(flat, gids)
     else:
-        for g in codes_present:
-            sel = flat[token_gids == g]
-            if sel.size == 0:
-                continue
-            uniq, counts = np.unique(sel, return_counts=True)
-            out[g] = (counts, hash64(uniq.astype(np.uint64, copy=False)),
-                      int(sel.size), uniq.astype(np.int64))
+        groups = _split_by_group(flat, gids)
+    out = {}
+    for g, sel in groups:
+        uniq, counts, h = _prep_tokens(sel)
+        out[g] = (counts, h, int(sel.size), uniq.astype(np.int64))
     return out
+
+
+def _numeric_values(col, codes, single: bool):
+    """Arrow column → {group code: float64 values in row order} for the
+    numeric kinds, nulls dropped. Groups without values get no entry."""
+    flat, gids = _column_values(col, codes, single)
+    vals = flat.astype(np.float64)
+    keep = ~np.isnan(vals)
+    vals = vals[keep]
+    if gids is None:
+        return {int(codes[0]): vals} if vals.size else {}
+    return dict(_split_by_group(vals, gids[keep]))
+
+
+def _ingest(st, kind: str, data) -> int:
+    """Feed one group's prepped batch to its state; returns items added."""
+    if kind not in _HASH_KINDS:
+        st.update(data)
+        return data.size
+    counts, h, n_raw, toks = data
+    if kind in ("cms", "cs"):
+        st.update_hashes(h, counts=counts)
+    elif kind == "mg":
+        st.update(toks, counts)
+    elif kind == "bloom":
+        st.update_hashes(h, assume_unique=True, n_raw=n_raw)
+    else:  # hll / theta: idempotent, deduped hash batch
+        st.update_hashes(h, assume_unique=True)
+    return n_raw
+
+
+def _rows_batch(rows: list, in_schema, group_cols, tail: dict):
+    """Row tuples (group values..., tail values...) → one Arrow RecordBatch.
+    `tail` maps the remaining column names to pyarrow types. Group columns
+    are pinned to their declared Spark types: inferred, an int32 group
+    column would arrive as int64 and Spark's Arrow reader fails on the
+    width mismatch only when a query groups by it."""
+    import pyarrow as pa
+
+    try:
+        from pyspark.sql.pandas.types import to_arrow_type
+        types = [to_arrow_type(in_schema[c].dataType) for c in group_cols]
+    except Exception:
+        types = [None] * len(group_cols)
+    types += list(tail.values())
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(col), type=t) for col, t in zip(zip(*rows), types)],
+        names=[*group_cols, *tail])
 
 
 def build_partials_multi(df, specs: dict, group_cols=("source",)):
@@ -352,7 +343,8 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
     the scan dominates, so N sketches for the price of one. Token arrays
     stay in Arrow's flat values buffer (zero-copy into numpy: no per-row
     object allocation), and one packed-key sort per batch serves every hash
-    sketch of a column across all groups.
+    sketch of a column across all groups. A (group × spec) state is created
+    on its first non-empty input, so empty groups emit no row.
     """
     from pyspark import TaskContext
 
@@ -364,121 +356,41 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
         "sketch string, " + PARTIAL_SCHEMA_TAIL
     value_cols = sorted({s["value_col"] for s in specs.values()})
     needed = group_cols + value_cols
-    hash_kinds = ("hll", "cms", "bloom", "theta", "mg", "cs")
 
     def acc(batches):
         import pyarrow as pa
 
         states: dict[tuple, object] = {}   # (gkey-tuple, name) → state
         counts: dict[tuple, int] = {}
-
-        def state_for(gkey, name):
-            key = (gkey, name)
-            st = states.get(key)
-            if st is None:
-                st = registry.make(specs[name]["kind"],
-                                   **specs[name].get("params") or {})
-                states[key] = st
-                counts[key] = 0
-            return st
-
         for batch in batches:
             codes, mapping = _batch_columns(batch, group_cols)
-            present = sorted(mapping)
-            single = len(present) == 1
-            col_cache = {}
-            for vc in value_cols:
-                col = batch.column(vc)
-                if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-                    flat, lens = _flatten_list_column(col)
-                    # single-group batches (source-partitioned tables) skip
-                    # the per-token group-id expansion entirely — half the
-                    # memory traffic of the scan hot loop
-                    tg = None if single else np.repeat(codes, lens)
-                    col_cache[vc] = ("list", flat, tg)
-                else:
-                    col_cache[vc] = ("scalar",
-                                     col.to_numpy(zero_copy_only=False),
-                                     None if single else codes)
-            stats_cache = {}
+            single = len(mapping) == 1
+            prepped = {}
             for name, spec in specs.items():
                 vc, kind = spec["value_col"], spec["kind"]
-                shape, flat, tg = col_cache[vc]
-                if kind in hash_kinds:
-                    if flat.dtype.kind == "f":
-                        # nullable integer scalar columns arrive as float
-                        # (+NaN) from Arrow: drop nulls, restore int64
-                        mask = ~np.isnan(flat)
-                        flat = flat[mask].astype(np.int64)
-                        if tg is not None:
-                            tg = tg[mask]
-                    if vc not in stats_cache:
-                        if single:
-                            uniq, ucounts = _unique_counts(flat)
-                            h = hash64(uniq.astype(np.uint64, copy=False))
-                            stats_cache[vc] = {present[0]: (
-                                ucounts, h, int(flat.size),
-                                uniq.astype(np.int64))}
-                        else:
-                            stats_cache[vc] = _grouped_token_stats(
-                                flat, tg, present)
-                    for g, (gcounts, h, n_raw, toks) \
-                            in stats_cache[vc].items():
-                        gkey = mapping[g]
-                        st = state_for(gkey, name)
-                        if kind in ("cms", "cs"):
-                            st.update_hashes(h, counts=gcounts)
-                        elif kind == "mg":
-                            st.update(toks, gcounts)
-                        elif kind == "bloom":
-                            st.update_hashes(h, assume_unique=True,
-                                             n_raw=n_raw)
-                        else:  # hll / theta
-                            st.update_hashes(h, assume_unique=True)
-                        counts[(gkey, name)] += n_raw
-                else:  # numeric quantile kinds
-                    vals = flat.astype(np.float64)
-                    for g in present:
-                        sel = vals if single else vals[tg == g]
-                        if sel.dtype.kind == "f":
-                            sel = sel[~np.isnan(sel)]
-                        if sel.size == 0:
-                            continue
-                        gkey = mapping[g]
-                        state_for(gkey, name).update(sel)
-                        counts[(gkey, name)] += sel.size
+                hashed = kind in _HASH_KINDS
+                if (vc, hashed) not in prepped:
+                    prep = _token_stats if hashed else _numeric_values
+                    prepped[vc, hashed] = prep(batch.column(vc), codes, single)
+                for g, data in prepped[vc, hashed].items():
+                    key = (mapping[g], name)
+                    if key not in states:
+                        states[key] = registry.make(
+                            kind, **spec.get("params") or {})
+                        counts[key] = 0
+                    counts[key] += _ingest(states[key], kind, data)
 
         if not states:
             return
         pid = TaskContext.get().partitionId()
-        cols: dict[str, list] = {c: [] for c in group_cols}
-        cols.update(sketch=[], sketch_type=[], state=[], n_items=[],
-                    part_id=[])
-        for (gkey, name), st in states.items():
-            for c, v in zip(group_cols, gkey):
-                cols[c].append(v)
-            cols["sketch"].append(name)
-            cols["sketch_type"].append(specs[name]["kind"])
-            cols["state"].append(st.to_bytes())
-            cols["n_items"].append(counts[(gkey, name)])
-            cols["part_id"].append(pid)
-        try:
-            from pyspark.sql.pandas.types import to_arrow_type
-            gtypes = {c: to_arrow_type(in_schema[c].dataType)
-                      for c in group_cols}
-        except Exception:
-            gtypes = {}
-        arrays, names = [], []
-        for c in group_cols:
-            arrays.append(pa.array(cols[c], type=gtypes.get(c)))
-            names.append(c)
-        arrays += [pa.array(cols["sketch"], pa.string()),
-                   pa.array(cols["sketch_type"], pa.string()),
-                   pa.array(cols["state"], pa.binary()),
-                   pa.array(cols["n_items"], pa.int64()),
-                   pa.array(cols["part_id"], pa.int64())]
-        names += ["sketch", "sketch_type", "state", "n_items", "part_id"]
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        yield _rows_batch(
+            [(*gkey, name, specs[name]["kind"], st.to_bytes(),
+              counts[gkey, name], pid)
+             for (gkey, name), st in states.items()],
+            in_schema, group_cols,
+            {"sketch": pa.string(), "sketch_type": pa.string(),
+             "state": pa.binary(), "n_items": pa.int64(),
+             "part_id": pa.int64()})
 
     return df.select(*needed).mapInArrow(acc, out_schema), out_schema
 

@@ -1,13 +1,19 @@
 """Pure-numpy sketch kernels. No pyspark imports here — everything operates on
-numpy arrays so the same code runs inside Arrow-batched pandas UDFs and in
-plain unit tests.
+numpy arrays so the same code runs inside Arrow-batched UDFs and in plain
+unit tests.
 
-Every kernel exposes the same surface:
-    update(state, values)    vectorized batch update, returns state
-    merge(a, b)              associative merge, returns new state
-    estimate(state, ...)     query the sketch
-    to_bytes(state) / from_bytes(buf)   versioned little-endian serialization
+Each kernel module defines one state class and an `empty(**params)` factory.
+Every state exposes the same core methods:
+    update(values)           vectorized in-place batch update, returns self
+                             (hash kinds also take update_hashes(h, ...))
+    merge(other)             associative merge, returns a new state
+    to_bytes() / Cls.from_bytes(buf)   versioned little-endian serialization
+and its queries: estimate(...) for the counting kinds, quantiles(qs) for
+KLL, t-digest and DDSketch.
+
+`registry` maps a kind name ("hll", "moments", ...) and the blob header's
+type byte to the class, so mixed blobs travel in one binary column.
 """
 
 from . import (hashing, hll, cms, bloom, kll, tdigest,  # noqa: F401
-               theta, mg, fd, cs, dd)  # noqa: F401
+               theta, mg, fd, cs, dd, moments)  # noqa: F401

@@ -88,6 +88,8 @@ def _encode_bigint(x: int) -> bytes:
 def _decode_bigint(buf: bytes, off: int) -> tuple[int, int]:
     (ln,) = struct.unpack_from("<I", buf, off)
     off += 4
+    if off + ln > len(buf):
+        raise ValueError("truncated Moments blob")
     return int.from_bytes(buf[off:off + ln], "little", signed=True), off + ln
 
 

@@ -8,49 +8,42 @@ import struct
 
 from . import bloom, cms, cs, dd, fd, hll, kll, mg, moments, tdigest, theta
 
-_TYPES = {
-    hll.TYPE_HLL: hll.HLL,
-    cms.TYPE_CMS: cms.CMS,
-    bloom.TYPE_BLOOM: bloom.Bloom,
-    kll.TYPE_KLL: kll.KLL,
-    tdigest.TYPE_TDIGEST: tdigest.TDigest,
-    theta.TYPE_THETA: theta.Theta,
-    mg.TYPE_MG: mg.MG,
-    fd.TYPE_FD: fd.FD,
-    cs.TYPE_CS: cs.CS,
-    dd.TYPE_DD: dd.DD,
-    moments.TYPE_MOMENTS: moments.Moments,
+# kind → (type byte in the blob header, state class, factory)
+_KINDS = {
+    "hll": (hll.TYPE_HLL, hll.HLL, hll.empty),
+    "cms": (cms.TYPE_CMS, cms.CMS, cms.empty),
+    "bloom": (bloom.TYPE_BLOOM, bloom.Bloom, bloom.empty),
+    "kll": (kll.TYPE_KLL, kll.KLL, kll.empty),
+    "tdigest": (tdigest.TYPE_TDIGEST, tdigest.TDigest, tdigest.empty),
+    "theta": (theta.TYPE_THETA, theta.Theta, theta.empty),
+    "mg": (mg.TYPE_MG, mg.MG, mg.empty),
+    "fd": (fd.TYPE_FD, fd.FD, fd.empty),
+    "cs": (cs.TYPE_CS, cs.CS, cs.empty),
+    "dd": (dd.TYPE_DD, dd.DD, dd.empty),
+    "moments": (moments.TYPE_MOMENTS, moments.Moments, moments.empty),
 }
-
-_FACTORIES = {
-    "hll": hll.empty,
-    "cms": cms.empty,
-    "bloom": bloom.empty,
-    "kll": kll.empty,
-    "tdigest": tdigest.empty,
-    "theta": theta.empty,
-    "mg": mg.empty,
-    "fd": fd.empty,
-    "cs": cs.empty,
-    "dd": dd.empty,
-    "moments": moments.empty,
-}
+_BY_TYPE = {typ: cls for typ, cls, _ in _KINDS.values()}
 
 
 def from_bytes(buf: bytes):
-    magic, _ver, typ = struct.unpack_from("<2sBB", buf, 0)
-    if magic != b"SK":
-        raise ValueError("bad sketch magic")
-    # look up BEFORE calling so a KeyError raised inside a kernel's
-    # from_bytes is never misreported as "unknown sketch type"
-    cls = _TYPES.get(typ)
-    if cls is None:
-        raise ValueError(f"unknown sketch type {typ}")
-    return cls.from_bytes(buf)
+    """Blob → sketch state. Truncated or corrupt headers raise ValueError."""
+    try:
+        magic, _ver, typ = struct.unpack_from("<2sBB", buf, 0)
+        if magic != b"SK":
+            raise ValueError("bad sketch magic")
+        # look up BEFORE calling so a KeyError raised inside a kernel's
+        # from_bytes is never misreported as "unknown sketch type"
+        cls = _BY_TYPE.get(typ)
+        if cls is None:
+            raise ValueError(f"unknown sketch type {typ}")
+        return cls.from_bytes(buf)
+    except struct.error as e:
+        raise ValueError(f"truncated sketch blob ({len(buf)} bytes): {e}") \
+            from None
 
 
 def make(kind: str, **params):
-    return _FACTORIES[kind](**params)
+    return _KINDS[kind][2](**params)
 
 
 def merge_blobs(blobs) -> bytes:

@@ -69,7 +69,6 @@ def fd_agg(df, vec_col: str = "embedding", d: int = 64, ell: int = 16,
         agg.PARTIAL_SCHEMA_TAIL
 
     def partial(batches):
-        import pandas as pd
         import pyarrow as pa
 
         states: dict[tuple, object] = {}
@@ -94,26 +93,10 @@ def fd_agg(df, vec_col: str = "embedding", d: int = 64, ell: int = 16,
         pid = TaskContext.get().partitionId()
         rows = [(*gkey, "fd", st.to_bytes(), st.n_rows, pid)
                 for gkey, st in states.items()]
-        pdf = pd.DataFrame(rows, columns=group_cols + [
-            "sketch_type", "state", "n_items", "part_id"])
-        # pin group-column Arrow types to the declared schema: from_pandas
-        # would infer int64 for an int32 group col (e.g. embeddings.label)
-        # and Spark's ArrowColumnVector accessor then dies on the width
-        # mismatch — same guard as agg.build_partials_multi
-        try:
-            from pyspark.sql.pandas.types import to_arrow_type
-            gtypes = {c: to_arrow_type(in_schema[c].dataType)
-                      for c in group_cols}
-        except Exception:
-            gtypes = {}
-        arrays = [pa.array(pdf[c], type=gtypes.get(c)) for c in group_cols]
-        arrays += [pa.array(pdf["sketch_type"], pa.string()),
-                   pa.array(pdf["state"], pa.binary()),
-                   pa.array(pdf["n_items"], pa.int64()),
-                   pa.array(pdf["part_id"], pa.int64())]
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=group_cols + ["sketch_type", "state",
-                                        "n_items", "part_id"])
+        yield agg._rows_batch(
+            rows, in_schema, group_cols,
+            {"sketch_type": pa.string(), "state": pa.binary(),
+             "n_items": pa.int64(), "part_id": pa.int64()})
 
     n_parts = df.rdd.getNumPartitions()
     needed = group_cols + [vec_col]

@@ -9,7 +9,7 @@ n_tok quantiles (t-digest / KLL), token membership (Bloom).
 
 Finalization (blob → number) touches one row per group — tiny — so scalar
 pandas UDFs over the blob column are fine there; the full-data scan path
-stays in agg.build_partials (vectorized numpy only).
+stays in agg.build_partials_multi (vectorized numpy only).
 """
 
 from __future__ import annotations
@@ -163,8 +163,6 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
     → DataFrame(group_cols..., token long, est_count long, rank int).
     """
     from pyspark import TaskContext
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     group_cols = list(group_cols)
     C = candidates_per_partial or max(8 * k, 256)
@@ -176,51 +174,26 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
     params = {"depth": depth, "width": width}
 
     def partial(batches):
-        """Arrow scan: zero-copy flat token buffer + shared dedupe per
-        batch (same hot loop as agg.build_partials_multi), plus exact local
-        candidate tracking for the distributed heavy-hitter argument."""
+        """Arrow scan through the build's shared batch prep
+        (agg._token_stats), plus exact local candidate tracking for the
+        distributed heavy-hitter argument."""
         import pyarrow as pa
 
         states: dict[tuple, cms_mod.CMS] = {}
         acc_u: dict[tuple, list] = {}  # per-batch (uniq, count) arrays
         acc_c: dict[tuple, list] = {}
-
-        def ingest(gkey, uniq, counts):
-            st = states.get(gkey)
-            if st is None:
-                st = cms_mod.CMS(**params)
-                states[gkey] = st
-                acc_u[gkey], acc_c[gkey] = [], []
-            uniq64 = uniq.astype(np.int64, copy=False)
-            st.update_hashes(hash64(uniq64.view(np.uint64)), counts=counts)
-            acc_u[gkey].append(uniq64)
-            acc_c[gkey].append(counts)
-
         for batch in batches:
             codes, mapping = agg._batch_columns(batch, group_cols)
-            col = batch.column(value_col)
-            flat, lens = agg._flatten_list_column(col)
-            tg = np.repeat(codes, lens) if len(mapping) > 1 else None
-            if flat.dtype.kind == "f":
-                # element-level nulls arrive as float64+NaN from Arrow:
-                # drop them (an astype would turn NaN into a garbage
-                # int64 token), same guard as agg.build_partials_multi
-                mask = ~np.isnan(flat)
-                flat = flat[mask].astype(np.int64)
-                if tg is not None:
-                    tg = tg[mask]
-            if flat.size == 0:
-                continue
-            if len(mapping) == 1:
-                uniq, counts = agg._unique_counts(flat)
-                ingest(mapping[min(mapping)], uniq, counts)
-            else:
-                for g in sorted(mapping):
-                    sel = flat[tg == g]
-                    if sel.size == 0:
-                        continue
-                    uniq, counts = agg._unique_counts(sel)
-                    ingest(mapping[g], uniq, counts)
+            stats = agg._token_stats(batch.column(value_col), codes,
+                                     len(mapping) == 1)
+            for g, (counts, h, _n_raw, toks) in stats.items():
+                gkey = mapping[g]
+                if gkey not in states:
+                    states[gkey] = cms_mod.CMS(**params)
+                    acc_u[gkey], acc_c[gkey] = [], []
+                states[gkey].update_hashes(h, counts=counts)
+                acc_u[gkey].append(toks)
+                acc_c[gkey].append(counts)
         if not states:
             return
         pid = TaskContext.get().partitionId()
@@ -235,23 +208,10 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
             order = np.lexsort((uniq, -tot))[:C]
             rows.append((*gkey, st.to_bytes(), uniq[order].tolist(),
                          int(st.n_items), pid))
-        pdf = pd.DataFrame(rows, columns=group_cols + [
-            "state", "cands", "n_items", "part_id"])
-        try:
-            from pyspark.sql.pandas.types import to_arrow_type
-            gtypes = {c: to_arrow_type(in_schema[c].dataType)
-                      for c in group_cols}
-        except Exception:
-            gtypes = {}
-        arrays = [pa.array(pdf[c].tolist(), type=gtypes.get(c))
-                  for c in group_cols]
-        arrays += [pa.array(pdf["state"].tolist(), pa.binary()),
-                   pa.array(pdf["cands"].tolist(), pa.list_(pa.int64())),
-                   pa.array(pdf["n_items"].tolist(), pa.int64()),
-                   pa.array(pdf["part_id"].tolist(), pa.int64())]
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=group_cols + ["state", "cands", "n_items",
-                                        "part_id"])
+        yield agg._rows_batch(
+            rows, in_schema, group_cols,
+            {"state": pa.binary(), "cands": pa.list_(pa.int64()),
+             "n_items": pa.int64(), "part_id": pa.int64()})
 
     def merge(key, pdf):
         merged = registry.merge_blobs(list(pdf["state"]))
@@ -266,23 +226,9 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
                    part_id=int(pdf["part_id"].iloc[0]))
         return pd.DataFrame([row])
 
-    import math
-
-    n_parts = df.rdd.getNumPartitions()
     partials = df.select(*group_cols, value_col).mapInArrow(partial, schema)
-    fanin = 64
-    rounds = max(1, math.ceil(math.log(max(n_parts, 2), fanin)))
-    merged = partials
-    for _ in range(rounds):
-        merged = merged.withColumn(
-            "part_id", (F.col("part_id") / F.lit(fanin)).cast("long"))
-        merged = merged.groupBy(*group_cols, "part_id").applyInPandas(merge, schema)
-    # unconditional final collapse to part_id=0 (same invariant as
-    # agg.tree_merge): finalize reads ONE row per group — if the rounds
-    # estimate ever under-counted, a silent >1-row group would drop
-    # candidate data
-    merged = (merged.withColumn("part_id", F.lit(0).cast("long"))
-              .groupBy(*group_cols, "part_id").applyInPandas(merge, schema))
+    merged = agg.tree_merge(partials, schema, group_cols,
+                            n_parts=df.rdd.getNumPartitions(), merge_fn=merge)
 
     # final: explode candidates, estimate with the merged CMS, rank, top-k
     def finalize(key, pdf):

@@ -1,7 +1,9 @@
 """SparkSession builder with the engine's standard configuration.
 
-Local defaults match the sandbox (local[N], 32 cores); on a real cluster the
-same settings apply per-executor and `master` is left to spark-submit.
+Local defaults come from the machine: local[os.cpu_count()] and a driver
+heap of a quarter of physical RAM (override with SPARK_GRAFT_CPUS /
+SPARK_GRAFT_DRIVER_MEM). On a real cluster the same settings apply
+per-executor and `master` is left to spark-submit.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ def get_spark(app_name: str = "sgp_sketch", master: str | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None):
     from pyspark.sql import SparkSession
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (SparkSession.builder.appName(app_name).master(master)
@@ -28,11 +30,17 @@ def get_spark(app_name: str = "sgp_sketch", master: str | None = None,
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
          .config("spark.driver.memory",
-                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+                 os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _quarter_ram())
          .config("spark.ui.enabled", "false"))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def _quarter_ram() -> str:
+    """A quarter of physical RAM as a JVM memory string (floor 1 GB)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, ram // 4 >> 20)}m"
 
 
 def _parse_bytes(v: str) -> int:

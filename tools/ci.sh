@@ -13,7 +13,10 @@ if ! python -c "import PIL, soundfile" 2>/dev/null; then
         && echo "ci: installed pillow/soundfile (codec tests enabled)" \
         || echo "ci: no network / pip unavailable - codec tests stay skipped"
 fi
+echo "ci: sgp_sketch LoC $(cat sgp_sketch/*.py sgp_sketch/kernels/*.py | wc -l)"
+t0=$(date +%s)
 python -m pytest tests/ -x -q
+echo "ci: tier-1 wall $(( $(date +%s) - t0 )) s"
 python tools/check_contract.py --json CONTRACT_LOG_sf0.001.json /root/testdata/sf0.001
 python tools/check_contract.py --json CONTRACT_LOG_sf0.01.json /root/testdata/sf0.01
 python tools/check_contract.py --json CONTRACT_LOG_sf0.1.json /root/testdata/sf0.1

@@ -293,7 +293,7 @@ def main():
     section("per_key_distinct (high-cardinality per-key state build)",
             e.q_per_key_distinct(spark, sf),
             "The OTHER side of the grouping-cardinality tradeoff: ONE\n"
-            "Exchange (hash on user_id) → MapInPandas builds each key's\n"
+            "Exchange (hash on user_id) → MapInArrow builds each key's\n"
             "theta state whole inside its shuffle partition → estimate\n"
             "UDF. Zero merge rounds, zero partial blow-up — the plan a\n"
             "built-in hash aggregate uses, emitting a key-partitioned\n"
